@@ -2,7 +2,8 @@ package graft.sources.rest
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters}
+import org.apache.spark.sql.sources.{EqualTo, Filter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.catalyst.InternalRow
@@ -43,8 +44,10 @@ import scala.jdk.CollectionConverters._
   *     .option("chaptersFile", ".../chapters.jsonl")
   *     .option("fixturesDir", ".../fixtures")     // offline transport
   *     .option("transport", "fixture")            // or a registered name
-  *     .option("ratePerSecond", "100")
-  *     .load()
+  *     .option("ratePerSecond", "100")            // finite and > 0, else
+  *     .load()                                    //   the scan fails
+  *     .filter(col("adapter") === "meetup")       // pushed down: only meetup
+  *                                                //   chapters are fetched
   * }}}
   */
 class RestSource extends TableProvider {
@@ -250,17 +253,37 @@ private[rest] class RestTable(props: Map[String, String])
     new RestScanBuilder(props ++ options.asScala)
 }
 
+/** Scan over the chapter list. Takes pushed `adapter = '<name>'`
+  * predicates — the filter each `Normalize.dispatch` branch puts over
+  * its adapter's payloads — so a branch plans and fetches only its own
+  * chapters, as the reference hands each chapter to the one worker its
+  * adapter names (api-runner.rkt:118-148). Every pushed filter is also
+  * handed back as a post-scan filter: pruning only drops partitions
+  * whose rows the filter would drop anyway, and Spark still evaluates
+  * it on every row. */
 private[rest] class RestScanBuilder(props: Map[String, String])
-  extends ScanBuilder with Scan with Batch {
+  extends ScanBuilder with SupportsPushDownFilters with Scan with Batch {
+  private var pushedAdapters: Array[String] = Array.empty
+
+  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    pushedAdapters = filters.collect { case EqualTo("adapter", a: String) => a }
+    filters
+  }
+  override def pushedFilters(): Array[Filter] =
+    pushedAdapters.map(EqualTo("adapter", _))
+
   override def build(): Scan = this
   override def readSchema(): StructType = RestSource.schema
   override def toBatch: Batch = this
 
-  /** One partition per chapter (api-runner.rkt:152-155 prepares one
-    * work item per chapter; chunking across workers is Spark's
-    * scheduler's job now). The chapter list is read on the driver,
-    * like read-chapter-json (api-runner.rkt:171-178). */
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** Shown by `explain()` on the scan node. */
+  override def description(): String =
+    s"RestScan PushedFilters: [${pushedFilters().mkString(", ")}], " +
+      s"chapters kept: ${keptChapters.size}/${chapters.size}"
+
+  /** (chapter, adapter) of every chapter in the list, read on the
+    * driver like read-chapter-json (api-runner.rkt:171-178). */
+  private lazy val chapters: Seq[(String, String)] = {
     val chaptersFile = props.getOrElse("chaptersfile",
       sys.error("graft-rest: option 'chaptersFile' is required"))
     val lines = java.nio.file.Files.readAllLines(
@@ -271,13 +294,33 @@ private[rest] class RestScanBuilder(props: Map[String, String])
     lines.filter(_.trim.nonEmpty).flatMap { line =>
       val node = mapper.readTree(line)
       (Option(node.get("chapter")), Option(node.get("adapter"))) match {
-        case (Some(c), Some(a)) =>
-          Some(RestPartition(c.asText, a.asText,
-            props.getOrElse("transport", "fixture"),
-            props.getOrElse("fixturesdir", ""),
-            props.getOrElse("ratepersecond", "100").toDouble))
+        case (Some(c), Some(a)) => Some(c.asText -> a.asText)
         case _ => None
       }
+    }.toSeq
+  }
+
+  /** Chapters whose adapter satisfies every pushed predicate: a row
+    * carries its partition's adapter, so a dropped chapter's rows
+    * would all fail the post-scan filter. */
+  private def keptChapters: Seq[(String, String)] =
+    chapters.filter { case (_, a) => pushedAdapters.forall(_ == a) }
+
+  /** One partition per kept chapter (api-runner.rkt:152-155 prepares
+    * one work item per chapter; chunking across workers is Spark's
+    * scheduler's job now). */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val rate = props.getOrElse("ratepersecond", "100")
+    // the token bucket never refills at a rate <= 0 and spins forever
+    // on NaN or infinity: fail the scan instead of hanging it
+    val ratePerSecond = rate.toDoubleOption
+      .filter(r => r > 0 && !r.isInfinite)
+      .getOrElse(throw new IllegalArgumentException(
+        s"graft-rest: option 'ratePerSecond' must be a finite number > 0, got '$rate'"))
+    val transport = props.getOrElse("transport", "fixture")
+    val fixturesDir = props.getOrElse("fixturesdir", "")
+    keptChapters.map { case (c, a) =>
+      RestPartition(c, a, transport, fixturesDir, ratePerSecond): InputPartition
     }.toArray
   }
 
@@ -360,12 +403,12 @@ private[rest] class RestReader(p: RestPartition)
     resp.lines.iterator
   }
 
+  private val chapter = UTF8String.fromString(p.chapter)
+  private val adapter = UTF8String.fromString(p.adapter)
   private var current: String = _
   override def next(): Boolean =
     if (lines.hasNext) { current = lines.next(); true } else false
   override def get(): InternalRow =
-    InternalRow(UTF8String.fromString(p.chapter),
-      UTF8String.fromString(p.adapter),
-      UTF8String.fromString(current))
+    InternalRow(chapter, adapter, UTF8String.fromString(current))
   override def close(): Unit = ()
 }

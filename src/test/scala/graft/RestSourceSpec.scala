@@ -1,8 +1,12 @@
 package graft
 
 import graft.sources.{Normalize, NormalizeQueries}
+import graft.sources.rest.{FixtureTransport, RestResponse, Transport}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** DataSourceV2 REST connector (A3–A6): partition-per-chapter scan,
   * offline fixture transport, token-bucket throttle, and end-to-end
@@ -17,6 +21,34 @@ class RestSourceSpec extends AnyFunSuite {
     .option("ratePerSecond", "1000")
     .load()
     .cache()
+
+  /** Fixture transport that counts fetches per chapter. */
+  private object counting extends Transport {
+    private val fetches =
+      new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    private val fixture = new FixtureTransport(fx)
+    override def fetch(adapter: String, chapter: String): RestResponse = {
+      fetches.merge(chapter, 1, (a, b) => a + b)
+      fixture.fetch(adapter, chapter)
+    }
+    /** Fetches per chapter since the last call. */
+    def take(): Map[String, Int] = {
+      val m = fetches.asScala.map { case (c, n) => c -> n.intValue }.toMap
+      fetches.clear()
+      m
+    }
+  }
+  Transport.register("counting", counting)
+
+  private def countingScan: DataFrame = s.read
+    .format("graft.sources.rest.RestSource")
+    .option("chaptersFile", s"$fx/chapters.jsonl")
+    .option("transport", "counting")
+    .option("ratePerSecond", "1000")
+    .load()
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
 
   test("one partition per chapter; payload rows carry their chapter") {
     assert(raw.rdd.getNumPartitions == 6) // 6 chapters incl. unknown adapter
@@ -35,6 +67,68 @@ class RestSourceSpec extends AnyFunSuite {
         .select("payload").as[String](org.apache.spark.sql.Encoders.STRING))
     val ok = Normalize.normalizeMeetup(meetup).filter(col("error").isNull)
     assert(ok.count() == 4) // 5 meetup payload rows, 1 ghost error
+
+    // the full ingest composition, uncached: each branch's adapter
+    // filter is pushed into its own scan, so a chapter is fetched once
+    // per sink action and the unknown-adapter chapter never
+    val scan = countingScan
+    def branch(adapter: String, schema: StructType) =
+      s.read.schema(schema).json(scan.filter(col("adapter") === adapter)
+        .select("payload").as(Encoders.STRING))
+    val (okAll, err) = Normalize.split(Normalize.dispatch(
+      branch("meetup", Normalize.meetupRawSchema),
+      branch("facebook", Normalize.facebookRawSchema),
+      branch("eventbrite", Normalize.eventbriteRawSchema),
+      Normalize.readChapters(s, s"$fx/chapters.jsonl")))
+    val out = Scratch.dir("restsource-compose")
+    counting.take()
+    Normalize.writeKeyedJson(okAll, s"$out/ok")
+    err.write.mode("overwrite").json(s"$out/err")
+    assert(counting.take() == Seq("newyork", "london", "berlin", "rome", "miami")
+      .map(_ -> 2).toMap)
+    assert(s.read.json(s"$out/err").filter(
+      col("error").startsWith("ERROR: No adapter gopher")).count() == 1)
+  }
+
+  test("adapter predicates are pushed: pruned chapters get no partition, no fetch") {
+    counting.take()
+    val meetup = countingScan.filter(col("adapter") === "meetup")
+    assert(meetup.rdd.getNumPartitions == 2)
+    assert(sortedRows(meetup) == sortedRows(raw.filter(col("adapter") === "meetup")))
+    assert(counting.take() == Map("newyork" -> 1, "london" -> 1))
+    val plan = meetup.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters: [EqualTo(adapter,meetup)]"), plan)
+    assert(plan.contains("chapters kept: 2/6"), plan)
+
+    // an adapter no chapter has: nothing planned, nothing fetched
+    val none = countingScan.filter(col("adapter") === "gopher-not")
+    assert(none.rdd.getNumPartitions == 0)
+    assert(none.count() == 0)
+    assert(counting.take().isEmpty)
+
+    // a predicate the scan does not take: every chapter is fetched and
+    // Spark's own filter still returns the right rows
+    val lowered = countingScan.filter(lower(col("adapter")) === "meetup")
+    assert(sortedRows(lowered) ==
+      sortedRows(raw.filter(lower(col("adapter")) === "meetup")))
+    assert(counting.take() == Seq("newyork", "london", "berlin", "rome",
+      "miami", "atlantis").map(_ -> 1).toMap)
+  }
+
+  test("a non-positive or non-finite ratePerSecond fails the scan loudly") {
+    for (rate <- Seq("0", "-1", "NaN", "Infinity")) {
+      val e = intercept[Exception] {
+        s.read.format("graft.sources.rest.RestSource")
+          .option("chaptersFile", s"$fx/chapters.jsonl")
+          .option("fixturesDir", fx)
+          .option("ratePerSecond", rate)
+          .load().count()
+      }
+      val messages = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+      assert(messages.contains("'ratePerSecond'") &&
+        messages.contains(s"got '$rate'"), messages)
+    }
   }
 
   test("a registered mock Transport is injected through the seam") {
