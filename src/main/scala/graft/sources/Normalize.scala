@@ -164,17 +164,25 @@ object Normalize {
     * A Scala UDF — the reference's one true custom scalar (A23); kept
     * OUT of relational hot paths so codegen elsewhere is unaffected. */
   private val MdHeader = "^(#{1,6}) (.*)$".r
+  // compiled once: String.replaceAll/matches/replaceFirst/split with a
+  // multi-char pattern compile their regex on every call, per row
+  private val MdCode = java.util.regex.Pattern.compile("`([^`]+)`")
+  private val MdLink = java.util.regex.Pattern.compile("\\[([^\\]]+)\\]\\(([^)\\s]+)\\)")
+  private val MdBold = java.util.regex.Pattern.compile("\\*\\*([^*]+)\\*\\*")
+  private val MdEm = java.util.regex.Pattern.compile("\\*([^*]+)\\*")
+  private val MdParaBreak = java.util.regex.Pattern.compile("\n\n")
+  private val MdOlItem = java.util.regex.Pattern.compile("^[0-9]+\\. .*")
+  private val MdOlPrefix = java.util.regex.Pattern.compile("^[0-9]+\\. ")
 
   def renderMarkdown(md: String): String =
     if (md == null) null
     else {
       val esc = md.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-      val code = esc.replaceAll("`([^`]+)`", "<code>$1</code>")
-      val links = code.replaceAll("\\[([^\\]]+)\\]\\(([^)\\s]+)\\)",
-        "<a href=\"$2\">$1</a>")
-      val bold = links.replaceAll("\\*\\*([^*]+)\\*\\*", "<strong>$1</strong>")
-      val em = bold.replaceAll("\\*([^*]+)\\*", "<em>$1</em>")
-      val paras = em.split("\n\n", -1).map { p =>
+      val code = MdCode.matcher(esc).replaceAll("<code>$1</code>")
+      val links = MdLink.matcher(code).replaceAll("<a href=\"$2\">$1</a>")
+      val bold = MdBold.matcher(links).replaceAll("<strong>$1</strong>")
+      val em = MdEm.matcher(bold).replaceAll("<em>$1</em>")
+      val paras = MdParaBreak.split(em, -1).map { p =>
         val lines = p.split("\n", -1)
         p match {
           case MdHeader(hs, rest) if !p.contains("\n") =>
@@ -182,8 +190,8 @@ object Normalize {
           case _ if lines.forall(_.startsWith("- ")) =>
             lines.map(l => s"<li>${l.stripPrefix("- ")}</li>")
               .mkString("<ul>", "", "</ul>")
-          case _ if lines.forall(_.matches("^[0-9]+\\. .*")) =>
-            lines.map(l => s"<li>${l.replaceFirst("^[0-9]+\\. ", "")}</li>")
+          case _ if lines.forall(MdOlItem.matcher(_).matches()) =>
+            lines.map(l => s"<li>${MdOlPrefix.matcher(l).replaceFirst("")}</li>")
               .mkString("<ol>", "", "</ol>")
           case _ => s"<p>$p</p>"
         }
@@ -367,10 +375,19 @@ object Normalize {
       .unionByName(unknownAdapterErrors(chapters))
 
   /** A8 split: (ok, err) — the two sinks of write-response
-    * (api-runner.rkt:55-61). */
+    * (api-runner.rkt:55-61).
+    *
+    * The error frame ends in a `rebalance` hint: error rows are few and
+    * spread thinly over every scan partition, so writing them where
+    * they fall costs one write task (and one part file) per partition.
+    * The rebalance lets AQE size the writer count by bytes instead —
+    * one task while errors are small, more only when they are large.
+    * `coalesce(1)` would pull the whole scan into one task, and
+    * `repartition(1)` would cap the writer at one task at any scale. */
   def split(all: DataFrame): (DataFrame, DataFrame) =
     (all.filter(col("error").isNull).drop("error"),
-      all.filter(col("error").isNotNull).select(col("chapter"), col("error")))
+      all.filter(col("error").isNotNull).select(col("chapter"), col("error"))
+        .hint("rebalance"))
 
   /** A7 keyed JSON sink: one directory (and, via the repartition, one
     * file) per chapter — `{out}/chapter=<id>/part-*.json`. */

@@ -29,6 +29,17 @@ import scala.jdk.CollectionConverters._
   * The fixture file is parsed and chapter-indexed ONCE per JVM
   * ([[FixtureIndex]]), not re-read per partition.
   *
+  * One snapshot of the API per loaded frame: each `load()` builds a
+  * [[RestTable]] that owns a [[Snapshot]] of the responses it has
+  * fetched, keyed by (adapter, chapter). Every action over that frame
+  * (and over frames derived from it) reads each chapter's page at most
+  * once, so the ok and error sinks of one ingest come from the same
+  * pages — as the reference fetches once and routes each result to
+  * one channel (`api-runner.rkt:55-61`). The snapshot is shared within
+  * the JVM that loaded the frame; an executor in another JVM fetches as
+  * if there were none. A failed fetch is never cached: the next action
+  * tries again. A fresh `load()` starts a fresh snapshot.
+  *
   * Rate limiting (A6, `meetup.rkt:9-26`) is two-layer:
   *  - a token bucket per executor JVM caps requests/second, shared
   *    across that executor's partitions — the Spark restatement of the
@@ -171,9 +182,11 @@ class HttpTransport(baseUrl: String,
       if (v.isPresent) Some(v.get) else None
     }
     RestResponse(
-      // \r?\n: a CRLF-delimited NDJSON body would otherwise leave a
-      // trailing \r on every payload line (review r12)
-      resp.body().split("\r?\n").toSeq.filter(_.trim.nonEmpty),
+      // one trailing \r stripped: a CRLF-delimited NDJSON body would
+      // otherwise leave it on every payload line (review r12)
+      resp.body().split('\n').toSeq
+        .map(l => if (l.endsWith("\r")) l.dropRight(1) else l)
+        .filter(_.trim.nonEmpty),
       hdr("X-Ratelimit-Remaining").flatMap(_.toLongOption),
       hdr("X-Ratelimit-Reset").flatMap(_.toLongOption).map(_ * 1000L))
   }
@@ -243,14 +256,74 @@ private[rest] object FixtureIndex {
     }
 }
 
+/** One response per (adapter, chapter), filled on first read. Each key
+  * gets its own lazy [[Snapshot.Cell]]: the map is locked only to
+  * find or add a cell, never across the fetch, and readers of other
+  * chapters are not held up by a slow one. */
+private[graft] final class Snapshot private (val id: String) {
+  private val cells =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Snapshot.Cell]()
+
+  /** The stored response for (adapter, chapter), or the result of
+    * `fetch` stored for later readers. A `fetch` that throws stores
+    * nothing. */
+  def read(adapter: String, chapter: String)(fetch: => RestResponse): RestResponse =
+    cells.computeIfAbsent((adapter, chapter), _ => new Snapshot.Cell).get(fetch)
+}
+
+/** JVM-wide registry of live snapshots, held weakly under a random id
+  * so an [[RestPartition]] can name its frame's snapshot without
+  * serializing it. A snapshot lives as long as its [[RestTable]] (the
+  * frame's plan) or a running scan over it; after that the registry
+  * drops it. */
+private[graft] object Snapshot {
+  private[rest] final class Cell {
+    private var response: RestResponse = _
+    def get(fetch: => RestResponse): RestResponse = synchronized {
+      if (response == null) response = fetch
+      response
+    }
+  }
+
+  private final class Ref(val id: String, s: Snapshot)
+    extends java.lang.ref.WeakReference[Snapshot](s, dropped)
+  private val dropped = new java.lang.ref.ReferenceQueue[Snapshot]()
+  private val registry = new java.util.concurrent.ConcurrentHashMap[String, Ref]()
+
+  private def purge(): Unit = {
+    var r = dropped.poll()
+    while (r != null) { registry.remove(r.asInstanceOf[Ref].id); r = dropped.poll() }
+  }
+
+  def create(): Snapshot = {
+    purge()
+    val s = new Snapshot(java.util.UUID.randomUUID().toString)
+    registry.put(s.id, new Ref(s.id, s))
+    s
+  }
+
+  /** The snapshot registered under `id`, if it is still alive in this
+    * JVM. */
+  def lookup(id: String): Option[Snapshot] =
+    Option(registry.get(id)).flatMap(r => Option(r.get))
+
+  /** Ids of the snapshots still alive in this JVM. */
+  def liveIds: Set[String] = {
+    purge()
+    registry.values.asScala.filter(_.get != null).map(_.id).toSet
+  }
+}
+
+/** One per `load()`: owns the frame's [[Snapshot]]. */
 private[rest] class RestTable(props: Map[String, String])
   extends Table with SupportsRead {
+  private val snapshot = Snapshot.create()
   override def name(): String = "graft_rest"
   override def schema(): StructType = RestSource.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new RestScanBuilder(props ++ options.asScala)
+    new RestScanBuilder(props ++ options.asScala, snapshot)
 }
 
 /** Scan over the chapter list. Takes pushed `adapter = '<name>'`
@@ -260,8 +333,9 @@ private[rest] class RestTable(props: Map[String, String])
   * adapter names (api-runner.rkt:118-148). Every pushed filter is also
   * handed back as a post-scan filter: pruning only drops partitions
   * whose rows the filter would drop anyway, and Spark still evaluates
-  * it on every row. */
-private[rest] class RestScanBuilder(props: Map[String, String])
+  * it on every row. Holds its table's snapshot, so a running scan
+  * keeps it alive. */
+private[rest] class RestScanBuilder(props: Map[String, String], snapshot: Snapshot)
   extends ScanBuilder with SupportsPushDownFilters with Scan with Batch {
   private var pushedAdapters: Array[String] = Array.empty
 
@@ -320,7 +394,7 @@ private[rest] class RestScanBuilder(props: Map[String, String])
     val transport = props.getOrElse("transport", "fixture")
     val fixturesDir = props.getOrElse("fixturesdir", "")
     keptChapters.map { case (c, a) =>
-      RestPartition(c, a, transport, fixturesDir, ratePerSecond): InputPartition
+      RestPartition(c, a, transport, fixturesDir, ratePerSecond, snapshot.id): InputPartition
     }.toArray
   }
 
@@ -331,7 +405,8 @@ private[rest] class RestScanBuilder(props: Map[String, String])
 private[rest] case class RestPartition(chapter: String, adapter: String,
                                        transport: String,
                                        fixturesDir: String,
-                                       ratePerSecond: Double)
+                                       ratePerSecond: Double,
+                                       snapshot: String)
   extends InputPartition
 
 private[rest] class RestReaderFactory extends PartitionReaderFactory {
@@ -395,13 +470,20 @@ private[rest] class RestReader(p: RestPartition)
 
   /** The API fetch for this chapter, through the [[Transport]] seam;
     * throttled before, header-feedback recorded after. */
-  private lazy val lines: Iterator[String] = {
-    Throttle.acquire(p.ratePerSecond) // one fetch per partition
+  private def fetch(): RestResponse = {
+    Throttle.acquire(p.ratePerSecond)
     val resp = Transport.resolve(p.transport, p.fixturesDir)
       .fetch(p.adapter, p.chapter)
     Throttle.noteHeaders(resp)
-    resp.lines.iterator
+    resp
   }
+
+  /** This chapter's page from the frame's snapshot when this JVM holds
+    * it (fetched by the first reader), else fetched directly. */
+  private lazy val lines: Iterator[String] =
+    Snapshot.lookup(p.snapshot)
+      .fold(fetch())(_.read(p.adapter, p.chapter)(fetch()))
+      .lines.iterator
 
   private val chapter = UTF8String.fromString(p.chapter)
   private val adapter = UTF8String.fromString(p.adapter)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.{Normalize, NormalizeQueries}
-import graft.sources.rest.{FixtureTransport, RestResponse, Transport}
+import graft.sources.rest.{FixtureTransport, RestResponse, Snapshot, Transport}
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -69,8 +69,9 @@ class RestSourceSpec extends AnyFunSuite {
     assert(ok.count() == 4) // 5 meetup payload rows, 1 ghost error
 
     // the full ingest composition, uncached: each branch's adapter
-    // filter is pushed into its own scan, so a chapter is fetched once
-    // per sink action and the unknown-adapter chapter never
+    // filter is pushed into its own scan, and both sink actions read
+    // the loaded frame's one snapshot, so a chapter is fetched once in
+    // all and the unknown-adapter chapter never
     val scan = countingScan
     def branch(adapter: String, schema: StructType) =
       s.read.schema(schema).json(scan.filter(col("adapter") === adapter)
@@ -83,11 +84,61 @@ class RestSourceSpec extends AnyFunSuite {
     val out = Scratch.dir("restsource-compose")
     counting.take()
     Normalize.writeKeyedJson(okAll, s"$out/ok")
+    System.gc() // the frame's plan, not luck, keeps the snapshot alive
     err.write.mode("overwrite").json(s"$out/err")
     assert(counting.take() == Seq("newyork", "london", "berlin", "rome", "miami")
-      .map(_ -> 2).toMap)
+      .map(_ -> 1).toMap)
     assert(s.read.json(s"$out/err").filter(
       col("error").startsWith("ERROR: No adapter gopher")).count() == 1)
+    // the rebalanced error frame is written by one task, not one per
+    // scan partition
+    val errParts = new java.io.File(s"$out/err").list().filter(_.startsWith("part-"))
+    assert(errParts.length == 1, errParts.mkString(", "))
+  }
+
+  test("a second load() of the same source fetches again") {
+    counting.take()
+    countingScan.count()
+    countingScan.count()
+    assert(counting.take() == Seq("newyork", "london", "berlin", "rome",
+      "miami", "atlantis").map(_ -> 2).toMap)
+  }
+
+  test("a failed fetch is not kept: the next action over the frame fetches again") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    Transport.register("fails-once", new Transport {
+      override def fetch(adapter: String, chapter: String): RestResponse =
+        if (calls.getAndIncrement() == 0) sys.error("graft-rest test: first call fails")
+        else counting.fetch(adapter, chapter)
+    })
+    val berlin = s.read.format("graft.sources.rest.RestSource")
+      .option("chaptersFile", s"$fx/chapters.jsonl")
+      .option("transport", "fails-once")
+      .option("ratePerSecond", "1000")
+      .load()
+      .filter(col("adapter") === "facebook") // berlin alone
+    counting.take()
+    intercept[Exception](berlin.count())
+    assert(berlin.count() == 4)
+    assert(counting.take() == Map("berlin" -> 1))
+    assert(calls.get() == 2)
+  }
+
+  test("a dropped frame's snapshot leaves the registry") {
+    val n = 4
+    val before = Snapshot.liveIds
+    var frames = Seq.fill(n)(countingScan.filter(col("adapter") === "meetup"))
+    frames.foreach(_.count())
+    val mine = Snapshot.liveIds -- before
+    assert(mine.size == n) // one per loaded frame, alive with it
+    frames = null
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    def live = (Snapshot.liveIds intersect mine).size
+    while (live >= n && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(100)
+    }
+    assert(live < n, s"$live of $n dropped frames' snapshots still registered")
   }
 
   test("adapter predicates are pushed: pruned chapters get no partition, no fetch") {
@@ -160,14 +211,19 @@ class RestSourceSpec extends AnyFunSuite {
         """{"chapter": "berlin", "id": "h1", "name": "Via HTTP"}""",
         """{"chapter": "berlin", "id": "h2", "name": "Also HTTP"}"""),
       "london" -> Seq(
-        """{"chapter": "london", "id": "h3", "name": "London HTTP"}"""))
+        """{"chapter": "london", "id": "h3", "name": "London HTTP"}"""),
+      // served CRLF-delimited: no line may keep its \r
+      "rome" -> Seq(
+        """{"chapter": "rome", "id": "h4", "name": "CRLF HTTP"}""",
+        """{"chapter": "rome", "id": "h5", "name": "Also CRLF"}"""))
     val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/", { exchange =>
       // path shape: /{adapter}/{chapter}/events (meetup.rkt:83-84)
       val parts = exchange.getRequestURI.getPath.split("/").filter(_.nonEmpty)
-      val body = served.getOrElse(parts(1), Nil).mkString("\n")
-        .getBytes("UTF-8")
+      val body = (if (parts(1) == "rome")
+        served(parts(1)).mkString("", "\r\n", "\r\n")
+      else served.getOrElse(parts(1), Nil).mkString("\n")).getBytes("UTF-8")
       exchange.getResponseHeaders.add("X-Ratelimit-Remaining", "30")
       exchange.sendResponseHeaders(200, body.length)
       exchange.getResponseBody.write(body)
